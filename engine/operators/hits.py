@@ -54,8 +54,7 @@ def hits(
     differ at the last ulp).
 
     check_every: cadence of the convergence-stats job (the 4-way delta join +
-    driver collect), mirroring pagerank's check_every — the recurrence itself
-    never needs it, so with k > 1 the non-check iterations run without any
+    driver collect) — the recurrence itself never needs it, so with k > 1 the non-check iterations run without any
     driver round-trip beyond the half-step norms, at the cost of up to k-1
     iterations past convergence. Metrics carry delta_l1 only on check
     iterations.

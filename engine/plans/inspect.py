@@ -17,6 +17,12 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().treeString()
 
 
+def analyzed_node_count(df: DataFrame) -> int:
+    """Operators in the analyzed logical plan — what Catalyst re-analyzes
+    every time the frame is used."""
+    return len(df._jdf.queryExecution().analyzed().treeString().splitlines())
+
+
 def live_plan(df: DataFrame) -> str:
     """Plan above any InMemoryRelation — the part that re-executes per run;
     the cache-build subtree below it runs once."""

@@ -11,7 +11,7 @@ dangling-mass redistribution (reference backend/cuda/pagerank_gpu.cu:137-191
 semantics), and writes:
   {out}/ranks/            Parquet (id, rank), Σ=1
   {out}/topk.txt          reference-format report (pagerank_gpu.cu:413-444)
-  {out}/metrics.json      per-iteration delta-L1 / dangling mass / shuffle bytes
+  {out}/metrics.json      per-iteration delta-L1 / dangling mass / Σrank / wall
 
 The same job binary is what BENCH/run_bench.py times at two parallelism
 levels for the N-vs-4N scaling-efficiency evidence.

@@ -3,6 +3,7 @@ files, dangling handling, salted-gather equivalence, checkpoint/resume."""
 
 from __future__ import annotations
 
+import os
 import random
 import re
 
@@ -34,13 +35,21 @@ def _ranks_array(result, n):
     return r
 
 
-def _load_edges(path):
-    out = []
-    for line in open(path):
-        p = line.split()
-        if len(p) == 2:
-            out.append((int(p[0]), int(p[1])))
+def _random_1k_10k(n=1000, m=10000, seed=1000):
+    """Deterministic stand-in for the reference's random_1k_10k.txt with its
+    documented properties (FIXTURES.md §2): N=1000, M=10000, uniform random
+    pairs in random order, no self-loops, deduplicated."""
+    rng = random.Random(seed)
+    seen, out = set(), []
+    while len(out) < m:
+        e = (rng.randrange(n), rng.randrange(n))
+        if e[0] != e[1] and e not in seen:
+            seen.add(e)
+            out.append(e)
     return out
+
+
+GRAPH_1K = _random_1k_10k()
 
 
 def test_small_graph_matches_oracle(spark):
@@ -72,6 +81,7 @@ def test_all_dangling_except_one(spark):
     assert np.allclose(_ranks_array(res, 4), expected, atol=1e-10)
 
 
+@pytest.mark.skipif(not os.path.exists(REF_1K), reason="reference fixtures absent")
 def test_golden_1k_parity(spark):
     """Engine reproduces the reference's committed output_1k.txt top-10
     (params pagerank_gpu defaults: alpha=0.85 tol=1e-8 max_iter=100)."""
@@ -97,7 +107,7 @@ def test_golden_1k_parity(spark):
 
 
 def test_salted_gather_equivalent(spark):
-    edges = _load_edges(REF_1K)[:4000]
+    edges = GRAPH_1K[:4000]
     df = _edges_df(spark, edges)
     plain = pagerank(df, tol=1e-10, max_iter=50)
     salted = pagerank(df, tol=1e-10, max_iter=50, salt_buckets=8)
@@ -110,7 +120,7 @@ def test_broadcast_and_shuffle_gather_agree(spark):
     """The exchange-free broadcast gather and the shuffle gather are two
     physical strategies for the same recurrence — scores must agree to
     float-sum-reorder tolerance."""
-    edges = _load_edges(REF_1K)[:4000]
+    edges = GRAPH_1K[:4000]
     df = _edges_df(spark, edges)
     bc = pagerank(df, tol=1e-10, max_iter=40, broadcast_ranks=True)
     sh = pagerank(df, tol=1e-10, max_iter=40, broadcast_ranks=False)
@@ -120,7 +130,7 @@ def test_broadcast_and_shuffle_gather_agree(spark):
 
 
 def test_checkpoint_resume_identical(spark, tmp_path):
-    edges = _load_edges(REF_1K)[:3000]
+    edges = GRAPH_1K[:3000]
     df = _edges_df(spark, edges)
     full = pagerank(df, tol=1e-10, max_iter=40, checkpoint_every=4)
 
@@ -132,10 +142,65 @@ def test_checkpoint_resume_identical(spark, tmp_path):
     assert resumed.iterations == full.iterations
     n = full.num_nodes
     assert np.allclose(_ranks_array(resumed, n), _ranks_array(full, n), atol=1e-12)
+    # the dangling mass recomputed from the snapshot is the one the
+    # uninterrupted run carried: every round from the resume point on has
+    # the same delta
+    k = partial.iterations
+    assert [m["delta_l1"] for m in resumed.metrics[k:]] == [
+        m["delta_l1"] for m in full.metrics[k:]
+    ]
+
+
+def _jobs_in_group(spark, fn):
+    """Run fn() under a fresh Spark job group; return (result, #jobs)."""
+    sc = spark.sparkContext
+    group = f"pagerank-round-shape-{random.getrandbits(32)}"
+    sc.setJobGroup(group, "pagerank round shape")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+SETUP_JOBS = 12  # build + start vector: fixed, whatever the round count
+
+
+def test_round_runs_two_jobs_per_iteration(spark):
+    """A round is the rank broadcast plus one materialization that carries
+    the convergence stats: at most 2 jobs per iteration on top of a fixed
+    setup count."""
+    df = _edges_df(spark, GRAPH_1K[:2000])
+    short, j_short = _jobs_in_group(spark, lambda: pagerank(df, tol=0.0, max_iter=2))
+    long_, j_long = _jobs_in_group(spark, lambda: pagerank(df, tol=0.0, max_iter=8))
+    assert (short.iterations, long_.iterations) == (2, 8)
+    assert j_long - j_short <= 2 * (8 - 2)
+    assert j_short <= 2 * 2 + SETUP_JOBS
+
+
+def test_pagerank_releases_all_but_its_ranks(spark):
+    """Adjacency, cut edge/node inputs, start vectors and every round's
+    checkpoint are freed before pagerank returns; only the blocks behind the
+    returned ranks stay."""
+    sc = spark.sparkContext
+    edges = GRAPH_1K[:1000]
+    n = max(max(e) for e in edges) + 1
+    df = _edges_df(spark, edges)
+    seed = spark.createDataFrame([(i, 1.0) for i in range(0, n, 3)], "id long, rank double")
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    res = pagerank(
+        df, nodes=spark.range(n).select("id"), tol=0.0, max_iter=3, init_ranks=seed
+    )
+    left = set(sc._jsc.getPersistentRDDs().keys()) - before
+    ranks_rdd = res.ranks._jdf.queryExecution().analyzed().child().rdd().id()
+    assert left == {ranks_rdd}
+    assert res.ranks.count() == n
 
 
 def test_iteration_metrics_recorded(spark):
-    edges = _load_edges(REF_1K)[:2000]
+    edges = GRAPH_1K[:2000]
     res = pagerank(_edges_df(spark, edges), tol=1e-8, max_iter=60)
     assert res.converged
     assert len(res.metrics) == res.iterations
@@ -146,6 +211,7 @@ def test_iteration_metrics_recorded(spark):
         assert abs(m["sum_rank"] - 1.0) < 1e-6
 
 
+@pytest.mark.skipif(not os.path.exists(GOLDEN_1K), reason="reference fixtures absent")
 def test_parse_topk_report_scan(spark):
     df = parse_topk_report(spark, GOLDEN_1K)
     rows = {r.id: r.score for r in df.collect()}
@@ -156,7 +222,7 @@ def test_parse_topk_report_scan(spark):
 def test_personalized_pagerank_vs_oracle(spark):
     from oracle import personalized_pagerank_numpy
 
-    edges = _load_edges(REF_1K)[:3000]
+    edges = GRAPH_1K[:3000]
     df = _edges_df(spark, edges)
     pers = {3: 5.0, 10: 3.0, 42: 2.0}
     pdf = spark.createDataFrame(list(pers.items()), "id long, weight double")
@@ -194,6 +260,7 @@ REF_5K_IN = "/root/reference/backend/jobs/input.txt"
 GOLDEN_5K = "/root/reference/backend/jobs/output.txt"
 
 
+@pytest.mark.skipif(not os.path.exists(REF_5K_IN), reason="reference fixtures absent")
 def test_golden_5k_parity(spark):
     """Engine reproduces the reference's largest committed workload
     (backend/jobs: N=5000, M=50000) — the graph summary block AND the top-10
@@ -235,7 +302,7 @@ def test_weighted_uniform_weights_equal_unweighted(spark):
     """weight_col with constant weights reduces to the unweighted kernel:
     w/Σw == 1/outdeg exactly when all weights are equal (IEEE division of
     equal quantities) — ranks agree to reorder tolerance."""
-    edges = _load_edges(REF_1K)[:3000]
+    edges = GRAPH_1K[:3000]
     plain = pagerank(_edges_df(spark, edges), tol=1e-10, max_iter=30)
     wdf = _wedges_df(spark, [(u, v, 2.0) for u, v in edges])
     weighted = pagerank(wdf, tol=1e-10, max_iter=30, weight_col="wt")
@@ -404,7 +471,7 @@ def test_inverse_pagerank_seed_candidates(spark):
     planned as TakeOrderedAndProject (no full sort)."""
     from engine.operators.trustrank import inverse_pagerank_seeds
 
-    edges = _load_edges(REF_1K)[:3000]
+    edges = GRAPH_1K[:3000]
     df = _edges_df(spark, edges)
     n = max(max(u, v) for u, v in edges) + 1
     nodes = spark.range(0, n).select("id")

@@ -28,19 +28,53 @@ def _adj(spark, partitions=8):
 
 
 def test_broadcast_gather_is_exchange_free(spark):
-    """The per-iteration SpMV of the broadcast path: join + partial agg +
-    final agg satisfied by the cached adjacency's dst-partitioning — zero
-    shuffle Exchanges in the live (re-executed) path."""
-    adj = _adj(spark)
-    ranks = spark.range(97).select(F.col("id").alias("src"), F.lit(1.0 / 97).alias("rank"))
-    gathered = (
-        adj.join(F.broadcast(ranks), "src")
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") * F.col("w")).alias("gathered"))
+    """The real per-iteration round of the broadcast path: join, partial and
+    final agg and the update all satisfied by the cached adjacency's
+    dst-partitioning — zero shuffle Exchanges in the live (re-executed)
+    path."""
+    from engine.operators.pagerank import build_adjacency, pagerank_round
+
+    edges = spark.createDataFrame(
+        [(i % 97, (i * 7) % 97) for i in range(500)], "src long, dst long"
     )
-    assert pi.count_exchanges(gathered, live_only=True) == 0
-    assert not pi.has_python_eval(gathered)
-    adj.unpersist()
+    adj = build_adjacency(edges, broadcast_ranks=True)
+    ranks = spark.range(97).select("id", F.lit(1.0 / 97).alias("rank"))
+    nxt = pagerank_round(adj, ranks, alpha=0.85, dm=0.0)
+    assert pi.count_exchanges(nxt, live_only=True) == 0
+    assert not pi.has_python_eval(nxt)
+    assert nxt.count() == 97
+    adj.release()
+
+
+def test_round_plan_independent_of_upstream(spark):
+    """The inputs' lineage is cut at build: a round's analyzed plan has the
+    same size whether the edges are a flat table or the end of a deep
+    join/UDF pipeline."""
+    from pyspark.sql.types import LongType
+
+    from engine.operators.pagerank import build_adjacency, pagerank_round
+
+    pairs = [(i % 97, (i * 7) % 97) for i in range(500)]
+    flat = spark.createDataFrame(pairs, "src long, dst long")
+    same = F.udf(lambda x: x, LongType())
+    ids = spark.range(97).select(F.col("id").alias("k"), same("id").alias("v"))
+    deep = (
+        flat.join(ids, flat.src == ids.k)
+        .select(F.col("v").alias("src"), "dst")
+        .join(ids, F.col("dst") == ids.k)
+        .select("src", F.col("v").alias("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .select("src", "dst", F.explode(F.array_repeat(F.lit(0), F.col("c").cast("int"))))
+        .select("src", "dst")
+    )
+    sizes = []
+    for edges in (flat, deep):
+        adj = build_adjacency(edges, broadcast_ranks=True)
+        ranks = spark.range(97).select("id", F.lit(1.0 / 97).alias("rank"))
+        sizes.append(pi.analyzed_node_count(pagerank_round(adj, ranks, alpha=0.85, dm=0.0)))
+        adj.release()
+    assert sizes[0] == sizes[1]
 
 
 def test_salted_gather_two_level_aggregate(spark):

@@ -2,11 +2,11 @@
 
 Documents (and lets a reviewer re-check) the plan-shape claims:
 
-1. PageRank broadcast gather — ONE stage: BroadcastHashJoin + HashAggregate
+1. PageRank broadcast round — ONE stage: BroadcastHashJoin + HashAggregate
    over the dst-partitioned cached adjacency, NO Exchange between the join
    and the final aggregate.
-2. PageRank shuffle gather + salt — two-level aggregate with the salted
-   partial, exactly one big Exchange (the gather itself).
+2. PageRank shuffle round + salt — two-level aggregate with the salted
+   partial.
 3. Parquet scan pushdown — filter + projection reach the scan
    (PushedFilters / ReadSchema).
 4. TF-IDF postings — explode + two hash aggregates, no Python in the plan
@@ -36,6 +36,7 @@ def _plan(df) -> str:
 
 def main() -> int:
     from engine.operators import tfidf
+    from engine.operators.pagerank import build_adjacency, pagerank_round
     from engine.session import build_session
 
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -45,41 +46,26 @@ def main() -> int:
         [(i % 97, (i * 7) % 97) for i in range(500)], "src long, dst long"
     )
 
-    # -- 1. broadcast gather (the exchange-free SpMV stage) --
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    adj = (
-        edges.join(out_deg, "src")
-        .select("src", "dst", (F.lit(1.0) / F.col("deg")).alias("w"))
-        .repartition(8, "dst")
-        .persist()
-    )
-    adj.count()
-    ranks = spark.range(97).select(F.col("id").alias("src"), F.lit(1.0 / 97).alias("rank"))
-    gathered_bc = (
-        adj.join(F.broadcast(ranks), "src")
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") * F.col("w")).alias("gathered"))
-    )
+    # -- 1. broadcast gather: the real round (the exchange-free SpMV stage) --
+    ranks = spark.range(97).select("id", F.lit(1.0 / 97).alias("rank"))
+    adj = build_adjacency(edges, broadcast_ranks=True)
+    round_bc = pagerank_round(adj, ranks, alpha=0.85, dm=0.0)
     print("=" * 72)
-    print("1. BROADCAST GATHER (pagerank broadcast_ranks=True)")
-    tree = gathered_bc._jdf.queryExecution().executedPlan().treeString()
+    print("1. BROADCAST GATHER ROUND (pagerank broadcast_ranks=True)")
+    tree = round_bc._jdf.queryExecution().executedPlan().treeString()
     live = tree.split("InMemoryRelation")[0]  # below that is the one-time cache build
     print(live)
     n_exchanges = live.count("Exchange")
     print(f">>> Exchange operators in the live path (cache-build excluded): {n_exchanges} "
           f"({'exchange-free as claimed' if n_exchanges == 0 else 'NOT exchange-free'})")
+    adj.release()
 
     # -- 2. salted shuffle gather --
-    ranks_src = ranks
-    partial = (
-        adj.join(ranks_src, "src")
-        .groupBy("dst", F.pmod(F.hash("src"), F.lit(8)).alias("_salt"))
-        .agg(F.sum(F.col("rank") * F.col("w")).alias("psum"))
-    )
-    gathered_salt = partial.groupBy("dst").agg(F.sum("psum").alias("gathered"))
+    adj = build_adjacency(edges, broadcast_ranks=False, salt_buckets=8)
     print("=" * 72)
-    print("2. SALTED SHUFFLE GATHER (pagerank salt_buckets=8)")
-    print(_plan(gathered_salt))
+    print("2. SALTED SHUFFLE GATHER ROUND (pagerank salt_buckets=8)")
+    print(_plan(pagerank_round(adj, ranks, alpha=0.85, dm=0.0)))
+    adj.release()
 
     # -- 3. parquet pushdown --
     li = spark.read.parquet(f"{sf}/lineitem.parquet")
